@@ -180,22 +180,6 @@ object Dedup {
     out
   }
 
-  /** Near-duplicate pairs ACROSS two corpora — the train-vs-eval
-    * DECONTAMINATION join ("drop every training document that is a
-    * near-duplicate of some benchmark document"), the near-dup complement
-    * of the exact shingle hit-rate check (q69). Same MinHash machinery as
-    * [[minhashNearDups]]: both sides are signed with the SAME permutation
-    * family, candidates come from the narrow cross-side band join (id,
-    * band, bandHash — never shingle arrays), pairs are deduped first, and
-    * shingle sets are fetched once per side for the exact Jaccard >=
-    * threshold verify. IDs live in SEPARATE id spaces (no `<` ordering):
-    * output is (left_id, right_id, jaccard).
-    *
-    * Scale shape: identical to the self-join case — at 100 TB train × 1 GB
-    * eval the band join's right side is tiny, so the exchange ships the
-    * eval bands to the train bands' partitioning and the verify join's
-    * eval side broadcasts; no all-pairs stage anywhere.
-    */
   // ---- persisted LSH index (incremental near-dup) ---------------------
 
   /** A persisted MinHash-LSH index: band keys + sorted shingle-hash sets
@@ -204,10 +188,11 @@ object Dedup {
     * ONCE; each new batch probes band keys (bounded batch side →
     * broadcast) and verifies exact Jaccard against only the matched
     * historical rows — never re-sketching 100 TB of history per batch.
-    * `hash64` is a function and cannot persist; the caller supplies the
-    * SAME family at probe time (the stored `params` row carries the rest
-    * and is enforced on load... the hash family mismatch shows up as
-    * zero recall, which the q54_planted-style recall tests catch).
+    * `hash64` is a function and cannot persist, so the caller must
+    * supply the SAME family at probe time. The stored `params` row
+    * carries the rest of the sketch geometry, and load applies it. A
+    * mismatched hash family is not detected: it shows up as zero recall,
+    * which the q54_planted-style recall tests catch.
     */
   case class MinhashIndex(shingleSize: Int, numHashes: Int, numBands: Int,
       seed: Long, bands: DataFrame, shingles: DataFrame)
@@ -225,14 +210,12 @@ object Dedup {
     import spark.implicits._
     val bands = if (numBands > 0) numBands else lshParams(numHashes, threshold)._1
     val base = shinglePrep(corpus, idCol, textCol, shingleSize, hash64)
-    Layout.writeClustered(
-      bandRows(base, numHashes, bands, seed, hash64),
-      s"$path/bands", Seq(col("band"), col("bandHash")), numFiles)
-    base.select(col("id"), array_sort(col("xxh")).as("sh"))
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    Seq((shingleSize, numHashes, bands, seed))
-      .toDF("shingle_size", "num_hashes", "num_bands", "seed")
-      .write.mode("overwrite").parquet(s"$path/params")
+    IndexStore.write(IndexStore.MinhashBands, path,
+      bandRows(base, numHashes, bands, seed, hash64), numFiles)
+    IndexStore.write(IndexStore.MinhashShingles, path, shingleSets(base))
+    IndexStore.writePart(path, "params",
+      Seq((shingleSize, numHashes, bands, seed))
+        .toDF("shingle_size", "num_hashes", "num_bands", "seed"))
     base.unpersist(blocking = false)
   }
 
@@ -251,23 +234,16 @@ object Dedup {
     * no-ops.
     */
   def deleteFromMinhashIndex(ids: DataFrame, idCol: String, path: String,
-      numFiles: Int = 32): Unit = {
-    val spark = ids.sparkSession
-    val del = ids.select(col(idCol).as("id")).distinct().materialized()
-    Layout.rewriteClustered(spark, s"$path/bands",
-      Seq(col("band"), col("bandHash")), numFiles)(
-      _.join(del, Seq("id"), "left_anti"))
-    Layout.rewriteClustered(spark, s"$path/shingles", Seq(col("id")),
-      math.max(4, numFiles / 4))(
-      _.join(del, Seq("id"), "left_anti"))
-  }
+      numFiles: Int = 32): Unit =
+    IndexStore.delete(ids, idCol, path, IndexStore.MinhashBands -> numFiles,
+      IndexStore.MinhashShingles -> math.max(4, numFiles / 4))(_ => ())
 
   def loadMinhashIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): MinhashIndex = {
-    val p = spark.read.parquet(s"$path/params").head()
+    val p = IndexStore.part(spark, path, "params").head()
     MinhashIndex(p.getInt(0), p.getInt(1), p.getInt(2), p.getLong(3),
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/shingles"))
+      IndexStore.read(spark, IndexStore.MinhashBands, path),
+      IndexStore.read(spark, IndexStore.MinhashShingles, path))
   }
 
   /** Sketch ONLY the new batch, probe the stored bands, verify exact
@@ -293,21 +269,8 @@ object Dedup {
     val bandRowCount = rBase.count() * index.numBands
     val probe = if (bandRowCount <= maxBroadcastBandRows) broadcast(rBands)
                 else rBands
-    val candidates = index.bands.as("a")
-      .join(probe.as("b"),
-        col("a.band") === col("b.band") && col("a.bandHash") === col("b.bandHash"))
-      .select(col("a.id").as("left_id"), col("b.id").as("right_id"))
-      .dropDuplicates("left_id", "right_id")
-    val result = candidates
-      .join(index.shingles.select(col("id").as("left_id"), col("sh").as("sh_a")),
-        "left_id")
-      .join(rBase.select(col("id").as("right_id"), array_sort(col("xxh")).as("sh_b")),
-        "right_id")
-      .withColumn("jaccard",
-        graft.functions.sketches.sorted_jaccard_long_sim(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("left_id"), col("right_id"), col("jaccard"))
-    val out = result.materialized(eager = true)
+    val out = verifiedAcross(index.bands, probe, index.shingles,
+      shingleSets(rBase), threshold)
     rBase.unpersist(blocking = false)
     out
   }
@@ -329,11 +292,10 @@ object Dedup {
     val spark = batch.sparkSession
     val idx = loadMinhashIndex(spark, path)
     val base = shinglePrep(batch, idCol, textCol, idx.shingleSize, hash64)
-    base.select(col("id"), array_sort(col("xxh")).as("sh"))
-      .write.mode("append").parquet(s"$path/shingles")
-    Layout.writeClustered(
-      bandRows(base, idx.numHashes, idx.numBands, idx.seed, hash64),
-      s"$path/bands", Seq(col("band"), col("bandHash")), numFiles,
+    IndexStore.write(IndexStore.MinhashShingles, path, shingleSets(base),
+      mode = "append")
+    IndexStore.write(IndexStore.MinhashBands, path,
+      bandRows(base, idx.numHashes, idx.numBands, idx.seed, hash64), numFiles,
       mode = "append")
     base.unpersist(blocking = false)
   }
@@ -360,6 +322,32 @@ object Dedup {
           .as("xxh"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
+  /** (id, sh): each document's sorted shingle-hash set, the exact-verify
+    * side of every index/across path.
+    */
+  private def shingleSets(base: DataFrame): DataFrame =
+    base.select(col("id"), array_sort(col("xxh")).as("sh"))
+
+  /** Verified pairs (left_id, right_id, jaccard) across two sides' band
+    * rows and shingle sets: candidates from the (band, bandHash) join,
+    * deduped BEFORE any shingle set is fetched, each side's set joined
+    * once, exact Jaccard >= threshold, pinned. The indexed probe and the
+    * live across pass both end here, so they agree by construction.
+    */
+  private def verifiedAcross(lBands: DataFrame, rBands: DataFrame,
+      lSets: DataFrame, rSets: DataFrame, threshold: Double): DataFrame =
+    lBands.as("a").join(rBands.as("b"),
+        col("a.band") === col("b.band") && col("a.bandHash") === col("b.bandHash"))
+      .select(col("a.id").as("left_id"), col("b.id").as("right_id"))
+      .dropDuplicates("left_id", "right_id")
+      .join(lSets.select(col("id").as("left_id"), col("sh").as("sh_a")), "left_id")
+      .join(rSets.select(col("id").as("right_id"), col("sh").as("sh_b")), "right_id")
+      .withColumn("jaccard",
+        graft.functions.sketches.sorted_jaccard_long_sim(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("left_id"), col("right_id"), col("jaccard"))
+      .materialized(eager = true)
+
   /** Shared band-key rows: (id, band, bandHash) from a prepped frame. */
   private def bandRows(base: DataFrame, numHashes: Int, bands: Int,
       seed: Long, hash64: Column => Column): DataFrame = {
@@ -373,6 +361,22 @@ object Dedup {
       .select(col("id"), col("bk.band"), col("bk.bandHash"))
   }
 
+  /** Near-duplicate pairs ACROSS two corpora — the train-vs-eval
+    * DECONTAMINATION join ("drop every training document that is a
+    * near-duplicate of some benchmark document"), the near-dup complement
+    * of the exact shingle hit-rate check (q69). Same MinHash machinery as
+    * [[minhashNearDups]]: both sides are signed with the SAME permutation
+    * family, candidates come from the narrow cross-side band join (id,
+    * band, bandHash — never shingle arrays), pairs are deduped first, and
+    * shingle sets are fetched once per side for the exact Jaccard >=
+    * threshold verify. IDs live in SEPARATE id spaces (no `<` ordering):
+    * output is (left_id, right_id, jaccard).
+    *
+    * Scale shape: identical to the self-join case — at 100 TB train × 1 GB
+    * eval the band join's right side is tiny, so the exchange ships the
+    * eval bands to the train bands' partitioning and the verify join's
+    * eval side broadcasts; no all-pairs stage anywhere.
+    */
   def minhashNearDupsAcross(left: DataFrame, right: DataFrame,
       idCol: String, textCol: String,
       shingleSize: Int = 3, numHashes: Int = 64, numBands: Int = 0,
@@ -381,22 +385,9 @@ object Dedup {
     val bands = if (numBands > 0) numBands else lshParams(numHashes, threshold)._1
     val lBase = shinglePrep(left, idCol, textCol, shingleSize, hash64)
     val rBase = shinglePrep(right, idCol, textCol, shingleSize, hash64)
-    def bandsOf(base: DataFrame): DataFrame =
-      bandRows(base, numHashes, bands, seed, hash64)
-    val candidates = bandsOf(lBase).as("a").join(bandsOf(rBase).as("b"),
-        col("a.band") === col("b.band") && col("a.bandHash") === col("b.bandHash"))
-      .select(col("a.id").as("left_id"), col("b.id").as("right_id"))
-      .dropDuplicates("left_id", "right_id")
-    val lSets = lBase.select(col("id").as("left_id"), array_sort(col("xxh")).as("sh_a"))
-    val rSets = rBase.select(col("id").as("right_id"), array_sort(col("xxh")).as("sh_b"))
-    val result = candidates
-      .join(lSets, "left_id")
-      .join(rSets, "right_id")
-      .withColumn("jaccard",
-        graft.functions.sketches.sorted_jaccard_long_sim(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("left_id"), col("right_id"), col("jaccard"))
-    val out = result.materialized(eager = true)
+    val out = verifiedAcross(bandRows(lBase, numHashes, bands, seed, hash64),
+      bandRows(rBase, numHashes, bands, seed, hash64), shingleSets(lBase),
+      shingleSets(rBase), threshold)
     lBase.unpersist(blocking = false)
     rBase.unpersist(blocking = false)
     out

@@ -47,21 +47,14 @@ object Retrieval {
     // and the postings pass below would otherwise EACH re-execute the
     // caller's lineage (including the toCores repartition) — this pins the
     // prepared (doc_id, text, dl) frame so the corpus is computed once
-    val d = Spread.toCores(docs).select(col(idCol).cast("long").as("doc_id"),
-        col(textCol).as("text"))
-      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double"))
-      .materialized()
+    val d = docLengths(docs, idCol, textCol)
     val statsRow = d.agg(count(lit(1)), avg(col("dl"))).head()
     val nDocs = statsRow.getLong(0).toDouble
     // empty corpus: no postings can match anyway; 1.0 keeps the (dead)
     // expression tree free of a null avgdl
     val avgdl = if (statsRow.isNullAt(1)) 1.0 else statsRow.getDouble(1)
 
-    // split(trim('')) yields [''] — drop the empty token on both sides so
-    // blank queries return no rows instead of ranking blank documents
-    val qterms = queries.select(col(qIdCol).cast("long").as("query_id"),
-        explode(array_distinct(split(trim(col(qTextCol)), "\\s+"))).as("token"))
-      .filter(col("token") =!= "")
+    val qterms = queryTerms(queries, qIdCol, qTextCol)
     val termSet = qterms.select(col("token")).distinct()
 
     // the broadcast term filter sits BELOW the term-count aggregation, so
@@ -78,14 +71,39 @@ object Retrieval {
     // re-scan is a token-clustered, file-skipped parquet read, and pinning
     // would hide the pushed `token IN`/semi-join from the probe plan — the
     // scan-pushdown contract its tests gate.
-    val matched = Materialize(d.select(col("doc_id"), col("dl"),
-        explode(split(trim(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "")
+    val matched = Materialize(docTokens(d)
       .join(broadcast(termSet), Seq("token"))
       .groupBy(col("doc_id"), col("dl"), col("token"))
       .agg(count(lit(1)).cast("double").as("tf")), eager = true)
     scoreMatched(matched, qterms, nDocs, avgdl, k, k1, b)
   }
+
+  /** (doc_id, text, dl) of a corpus, pinned: the live pass and an index
+    * batch both read it twice (corpus statistics, then postings).
+    */
+  private def docLengths(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
+    Spread.toCores(docs).select(col(idCol).cast("long").as("doc_id"),
+        col(textCol).as("text"))
+      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double"))
+      .materialized()
+
+  /** (doc_id, dl, token): one row per token occurrence of [[docLengths]].
+    * split(trim('')) yields [''], so the empty token is dropped here and in
+    * [[queryTerms]]: blank queries return no rows instead of ranking blank
+    * documents.
+    */
+  private def docTokens(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), col("dl"),
+        explode(split(trim(col("text")), "\\s+")).as("token"))
+      .filter(col("token") =!= "")
+
+  /** (query_id, token): each query's distinct terms. */
+  private def queryTerms(queries: DataFrame, qIdCol: String,
+      qTextCol: String): DataFrame =
+    queries.select(col(qIdCol).cast("long").as("query_id"),
+        explode(array_distinct(split(trim(col(qTextCol)), "\\s+"))).as("token"))
+      .filter(col("token") =!= "")
 
   /** Shared BM25 scoring tail over query-term postings (doc_id, dl,
     * token, tf) — used by the live [[bm25TopK]] pass and the persisted
@@ -132,6 +150,66 @@ object Retrieval {
     */
   case class Bm25Index(nDocs: Long, avgdl: Double, postings: DataFrame)
 
+  /** One batch's (postings, n_docs, sum_dl) triple — build and append
+    * both produce exactly this.
+    */
+  private def bm25BatchParts(docs: DataFrame, idCol: String,
+      textCol: String): (DataFrame, Long, Long) = {
+    val d = docLengths(docs, idCol, textCol)
+    val (nDocs, sumDl) = totals(d)
+    val postings = docTokens(d)
+      .groupBy(col("token"), col("doc_id"), col("dl"))
+      .agg(count(lit(1)).cast("double").as("tf"))
+    (postings, nDocs, sumDl)
+  }
+
+  /** The stats part is swapped staged-then-rename
+    * ([[IndexStore.writePart]]), so the live `stats` dir is never
+    * half-written, and every stats reader ([[bm25Stats]]) finishes a swap
+    * a crash interrupted. A crash BETWEEN a postings mutation and this
+    * swap leaves stats stale by exactly the interrupted batch —
+    * single-writer semantics, recoverable exactly via [[repairBm25Stats]]
+    * (postings are the source of truth; the stats pair is derivable).
+    */
+  private def writeBm25Stats(spark: SparkSession, path: String,
+      nDocs: Long, sumDl: Long): Unit = {
+    import spark.implicits._
+    IndexStore.writePart(path, "stats",
+      Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl"))
+  }
+
+  /** The stored exact (n_docs, sum_dl) pair — the one stats reader, shared
+    * by load, append and delete.
+    */
+  private def bm25Stats(spark: SparkSession, path: String): (Long, Long) = {
+    val s = IndexStore.part(spark, path, "stats").head()
+    (s.getLong(0), s.getLong(1))
+  }
+
+  /** (row count, exact integer Σdl) of one-row-per-document rows. */
+  private def totals(docs: DataFrame): (Long, Long) = {
+    val r = docs.agg(count(lit(1)), sum(col("dl").cast("long"))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** [[totals]] of a postings slice: dl is denormalized into every
+    * posting, so one distinct over (doc_id, dl) replays the integer sums
+    * bit-for-bit.
+    */
+  private def docTotals(postings: DataFrame): (Long, Long) =
+    totals(postings.select(col("doc_id"), col("dl")).distinct())
+
+  /** Recompute the exact (n_docs, sum_dl) pair from the postings and swap
+    * the stats in. The recovery documented on [[writeBm25Stats]] for a
+    * crash between a postings append and its stats bump.
+    */
+  def repairBm25Stats(spark: SparkSession, path: String): (Long, Long) = {
+    val (nDocs, sumDl) =
+      docTotals(IndexStore.read(spark, IndexStore.Bm25Postings, path))
+    writeBm25Stats(spark, path, nDocs, sumDl)
+    (nDocs, sumDl)
+  }
+
   /** Tokenize + count ONCE, persist — the retrieval analog of
     * [[Similarity.saveIvfIndex]]: `<path>/postings` holds one row per
     * (token, doc_id) with tf and the doc length DENORMALIZED into the
@@ -140,75 +218,13 @@ object Retrieval {
     * RANGE-CLUSTERED ON TOKEN so a probe's `token IN (...)` predicate
     * meets per-file min/max term ranges and skips every file whose terms
     * can't match — the inverted-index seek, expressed as parquet file
-    * skipping. `<path>/stats` carries (n_docs, avgdl). A 100 TB corpus
+    * skipping. `<path>/stats` carries (n_docs, sum_dl). A 100 TB corpus
     * pays the tokenize+count pass once here instead of per query batch.
     */
-  /** One batch's (postings, n_docs, sum_dl) triple — build and append
-    * both produce exactly this.
-    */
-  private def bm25BatchParts(docs: DataFrame, idCol: String,
-      textCol: String): (DataFrame, Long, Long) = {
-    val d = Spread.toCores(docs).select(col(idCol).cast("long").as("doc_id"),
-        col(textCol).as("text"))
-      .withColumn("dl", TextAnalysis.tokenCount(col("text")).cast("double"))
-      .materialized()
-    val statsRow = d.agg(count(lit(1)),
-      sum(col("dl").cast("long"))).head()
-    val nDocs = statsRow.getLong(0)
-    val sumDl = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
-    val postings = d.select(col("doc_id"), col("dl"),
-        explode(split(trim(col("text")), "\\s+")).as("token"))
-      .filter(col("token") =!= "")
-      .groupBy(col("token"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-    (postings, nDocs, sumDl)
-  }
-
-  /** Stats swap is staged-then-rename so the live `stats` dir is never
-    * half-written: the new row lands in `stats__staged`, then one
-    * directory rename (atomic on local/HDFS) replaces `stats`. A crash
-    * mid-swap leaves `stats__staged` behind; [[loadBm25Index]] finishes
-    * the rename on next load. A crash BETWEEN the postings append and
-    * this swap leaves stats stale by exactly the interrupted batch —
-    * single-writer semantics, recoverable exactly via
-    * [[repairBm25Stats]] (postings are the source of truth; the stats
-    * pair is derivable).
-    */
-  private def writeBm25Stats(spark: SparkSession, path: String,
-      nDocs: Long, sumDl: Long): Unit = {
-    import spark.implicits._
-    import org.apache.hadoop.fs.Path
-    val staged = new Path(s"$path/stats__staged")
-    val live = new Path(s"$path/stats")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-      .write.mode("overwrite").parquet(staged.toString)
-    if (fs.exists(live)) fs.delete(live, true)
-    require(fs.rename(staged, live),
-      s"writeBm25Stats: rename $staged -> $live failed")
-  }
-
-  /** Recompute the exact (n_docs, sum_dl) pair from the postings — dl is
-    * denormalized into every posting, so one distinct over (doc_id, dl)
-    * replays the integer sums bit-for-bit — and swap the stats in. The
-    * recovery documented on [[writeBm25Stats]] for a crash between a
-    * postings append and its stats bump.
-    */
-  def repairBm25Stats(spark: SparkSession, path: String): (Long, Long) = {
-    val docs = spark.read.parquet(s"$path/postings")
-      .select(col("doc_id"), col("dl")).distinct()
-    val r = docs.agg(count(lit(1)), sum(col("dl").cast("long"))).head()
-    val nDocs = r.getLong(0)
-    val sumDl = if (r.isNullAt(1)) 0L else r.getLong(1)
-    writeBm25Stats(spark, path, nDocs, sumDl)
-    (nDocs, sumDl)
-  }
-
   def saveBm25Index(docs: DataFrame, idCol: String, textCol: String,
       path: String, numFiles: Int = 32): Unit = {
     val (postings, nDocs, sumDl) = bm25BatchParts(docs, idCol, textCol)
-    Layout.writeClustered(postings, s"$path/postings", Seq(col("token")),
-      numFiles)
+    IndexStore.write(IndexStore.Bm25Postings, path, postings, numFiles)
     writeBm25Stats(docs.sparkSession, path, nDocs, sumDl)
   }
 
@@ -229,62 +245,48 @@ object Retrieval {
   def appendToBm25Index(newDocs: DataFrame, idCol: String, textCol: String,
       path: String, numFiles: Int = 8): Unit = {
     val spark = newDocs.sparkSession
-    val s = spark.read.parquet(s"$path/stats").head()
+    val (n0, dl0) = bm25Stats(spark, path)
     val (postings, nDocs, sumDl) = bm25BatchParts(newDocs, idCol, textCol)
-    Layout.writeClustered(postings, s"$path/postings", Seq(col("token")),
-      numFiles, mode = "append")
-    writeBm25Stats(spark, path, s.getLong(0) + nDocs, s.getLong(1) + sumDl)
+    IndexStore.write(IndexStore.Bm25Postings, path, postings, numFiles,
+      mode = "append")
+    writeBm25Stats(spark, path, n0 + nDocs, dl0 + sumDl)
   }
 
   /** Delete documents from a persisted index WITHOUT rebuilding — the
     * removal half of the index lifecycle (takedowns, right-to-be-forgotten
     * batches, retention cuts; the complement of [[appendToBm25Index]]).
     * The deleted index is BIT-IDENTICAL to a rebuild over corpus ∖ ids:
-    * postings are rewritten through the same token-clustered writer (file
-    * skipping preserved — no tombstones to merge at probe time), and the
-    * stats decrement by the deleted docs' exact integer (count, Σdl),
-    * recovered from the postings themselves (dl is denormalized into
-    * every posting — no side lookup).
+    * postings are rewritten through the same token-clustered writer
+    * ([[IndexStore.delete]] — file skipping preserved, no tombstones to
+    * merge at probe time), and the stats decrement by the deleted docs'
+    * exact integer (count, Σdl), recovered from the postings themselves
+    * before the rewrite.
     *
-    * Crash semantics match append's: the postings swap is atomic
-    * ([[Layout.rewriteClustered]]); a crash between the swap and the
-    * stats write leaves stats stale by exactly this delete, recoverable
-    * via [[repairBm25Stats]]. Single writer, like all maintenance passes.
-    * Ids absent from the index are no-ops (delete is idempotent).
+    * Crash semantics match append's: the postings swap is atomic; a crash
+    * between the swap and the stats write leaves stats stale by exactly
+    * this delete, recoverable via [[repairBm25Stats]]. Single writer, like
+    * all maintenance passes. Ids absent from the index are no-ops (delete
+    * is idempotent).
     */
   def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String,
       numFiles: Int = 32): Unit = {
     val spark = ids.sparkSession
-    val del = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .materialized()
-    // stats delta BEFORE the rewrite (the rows are about to disappear)
-    val r = spark.read.parquet(s"$path/postings")
-      .join(del, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("dl")).distinct()
-      .agg(count(lit(1)), sum(col("dl").cast("long"))).head()
-    val nDel = r.getLong(0)
-    val dlDel = if (r.isNullAt(1)) 0L else r.getLong(1)
-    Layout.rewriteClustered(spark, s"$path/postings", Seq(col("token")),
-      numFiles)(_.join(del, Seq("doc_id"), "left_anti"))
-    val s = spark.read.parquet(s"$path/stats").head()
-    writeBm25Stats(spark, path, s.getLong(0) - nDel, s.getLong(1) - dlDel)
+    val (nDel, dlDel) = IndexStore.delete(
+        ids.select(col(idCol).cast("long").as(idCol)), idCol, path,
+        IndexStore.Bm25Postings -> numFiles) { del =>
+      docTotals(IndexStore.read(spark, IndexStore.Bm25Postings, path)
+        .join(del, Seq("doc_id"), "left_semi"))
+    }
+    val (n0, dl0) = bm25Stats(spark, path)
+    writeBm25Stats(spark, path, n0 - nDel, dl0 - dlDel)
   }
 
   def loadBm25Index(spark: SparkSession, path: String): Bm25Index = {
-    // finish an interrupted stats swap (crash after delete, before rename)
-    locally {
-      import org.apache.hadoop.fs.Path
-      val staged = new Path(s"$path/stats__staged")
-      val live = new Path(s"$path/stats")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(live) && fs.exists(staged)) fs.rename(staged, live)
-    }
-    val s = spark.read.parquet(s"$path/stats").head()
+    val (nDocs, sumDl) = bm25Stats(spark, path)
     // avgdl derived at load time from the exact integer sums; empty
     // corpus → 1.0 keeps the scoring expression free of a null
-    val avgdl = if (s.getLong(0) == 0L) 1.0
-      else s.getLong(1).toDouble / s.getLong(0).toDouble
-    Bm25Index(s.getLong(0), avgdl, spark.read.parquet(s"$path/postings"))
+    val avgdl = if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs.toDouble
+    Bm25Index(nDocs, avgdl, IndexStore.read(spark, IndexStore.Bm25Postings, path))
   }
 
   /** Probe a persisted inverted index with the query batch's distinct
@@ -312,9 +314,7 @@ object Retrieval {
   def bm25TopKWithIndex(index: Bm25Index, queries: DataFrame,
       qIdCol: String, qTextCol: String, k: Int, k1: Double = 1.2,
       b: Double = 0.75, maxLiteralTerms: Int = 1024): DataFrame = {
-    val qterms = queries.select(col(qIdCol).cast("long").as("query_id"),
-        explode(array_distinct(split(trim(col(qTextCol)), "\\s+"))).as("token"))
-      .filter(col("token") =!= "")
+    val qterms = queryTerms(queries, qIdCol, qTextCol)
     val termsDf = qterms.select(col("token")).distinct()
     val bounded = termsDf.limit(maxLiteralTerms + 1).collect()
     val matched =

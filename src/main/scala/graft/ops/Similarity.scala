@@ -104,7 +104,7 @@ object Similarity {
     * strict-greater argmax tie-breaks on ascending cid exactly like the
     * `Window.orderBy(d.desc, cid)` formulation it replaced.
     */
-  private def collectCents(cents: DataFrame): (Array[Array[Double]], Array[Long]) = {
+  private[ops] def collectCents(cents: DataFrame): (Array[Array[Double]], Array[Long]) = {
     val rows = cents
       .select(col("cid").cast("long"), col("centroid").cast("array<double>"))
       .collect()
@@ -506,9 +506,7 @@ object Similarity {
   private def ivfProbeTopKUnit(assigned: DataFrame, q: DataFrame,
       k: Int, nProbe: Int,
       cm: Array[Array[Double]], cids: Array[Long]): DataFrame = {
-    val probes = q
-      .select(col("query_id"), col("qv"),
-        explode(graft.functions.sketches.top_centroids(col("qv"), cm, cids, nProbe)).as("cid"))
+    val probes = cellProbes(q, "qv", cm, cids, nProbe)
     val scored = assigned.join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), cosine(col("cv"), col("qv")).as("cos"))
@@ -537,21 +535,37 @@ object Similarity {
     val cents = kmeansIterate(corpus, idCol, vecCol,
       centroids(corpus, idCol, vecCol, numCentroids), kmeansIters)
     val (cm, cids) = collectCents(cents)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    Layout.writeClustered(assignWith(corpus, idCol, vecCol, cm, cids, metaCols),
-      s"$path/assigned", Seq(col("cid")), numFiles)
+    IndexStore.writeCentroids(corpus.sparkSession, path, cm, cids)
+    IndexStore.write(IndexStore.IvfAssigned, path,
+      assignWith(corpus, idCol, vecCol, cm, cids, metaCols), numFiles)
   }
 
   def loadIvfIndex(spark: SparkSession, path: String): IvfIndex = {
-    val (cm, cids) = collectCents(spark.read.parquet(s"$path/centroids"))
-    IvfIndex(cm, cids, spark.read.parquet(s"$path/assigned"))
+    val (cm, cids) = IndexStore.centroids(spark, path)
+    IvfIndex(cm, cids, IndexStore.read(spark, IndexStore.IvfAssigned, path))
   }
 
-  /** Probe a persisted IVF index. The probed cid set is applied as a scan
-    * FILTER (not just a join key) so the pushed-down predicate meets the
-    * clustered layout's per-file cid ranges and unprobed files are never
-    * read — the collect behind it is the query-side centroid set, bounded
-    * by queries × nProbe.
+  /** (query_id, `qv`, cid): one row per cell each query probes — its
+    * `nProbe` nearest centroids, a per-row expression (no crossJoin).
+    */
+  private def cellProbes(q: DataFrame, qv: String, cm: Array[Array[Double]],
+      cids: Array[Long], nProbe: Int): DataFrame =
+    q.select(col("query_id"), col(qv), explode(
+      graft.functions.sketches.top_centroids(col(qv), cm, cids, nProbe)).as("cid"))
+
+  /** Rows of a cid-clustered index table in the cells of `probes`
+    * ([[cellProbes]]). The probed cid set is applied as a scan FILTER (not
+    * just a join key) so the pushed-down predicate meets the clustered
+    * layout's per-file cid ranges and unprobed files are never read — the
+    * collect behind it is the query-side centroid set, bounded by
+    * queries × nProbe.
+    */
+  private def probedCells(table: DataFrame, probes: DataFrame): DataFrame =
+    table.filter(col("cid").isin(
+      probes.select("cid").distinct().collect().map(_.getLong(0)): _*))
+
+  /** Probe a persisted IVF index, reading only the probed cells'
+    * files ([[probedCells]]).
     */
   def ivfTopKWithIndex(index: IvfIndex, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nProbe: Int = 4): DataFrame =
@@ -577,12 +591,8 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"))
       .materialized(true)
-    val probedCids = q
-      .select(explode(graft.functions.sketches.top_centroids(
-        col("qv"), index.cm, index.cids, nProbe)).as("cid"))
-      .distinct().collect().map(_.getLong(0))
-    val assigned = index.assigned.filter(pred)
-      .filter(col("cid").isin(probedCids: _*))
+    val assigned = probedCells(index.assigned.filter(pred),
+      cellProbes(q, "qv", index.cm, index.cids, nProbe))
     ivfProbeTopKUnit(assigned, q, k, nProbe, index.cm, index.cids)
   }
 
@@ -590,44 +600,21 @@ object Similarity {
   case class PqIndex(codebooks: Array[Array[Array[Double]]], codes: DataFrame)
 
   /** Train codebooks + encode once, persist: `<path>/codebooks` as
-    * parquet rows (j, code, centroid) — parquet rather than JSON text so
-    * the doubles round-trip bit-exactly — and `<path>/codes` (vec_id,
-    * codes), the 8-bytes-per-vector representation a 100 TB ANN index
-    * actually stores.
+    * parquet rows (j, code, centroid) and `<path>/codes` (vec_id, codes),
+    * the 8-bytes-per-vector representation a 100 TB ANN index actually
+    * stores.
     */
   def savePqIndex(corpus: DataFrame, idCol: String, vecCol: String,
       path: String, dim: Int, m: Int = 8, ksub: Int = 16, iters: Int = 2,
       trainFraction: Double = 1.0): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val cb = pqTrainCodebooks(corpus, idCol, vecCol, dim, m, ksub, iters, trainFraction)
-    val rows = for (j <- cb.indices; c <- cb(j).indices)
-      yield (j, c, cb(j)(c).toSeq)
-    rows.toDF("j", "code", "centroid")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    pqEncode(corpus, idCol, vecCol, cb)
-      .write.mode("overwrite").parquet(s"$path/codes")
+    IndexStore.writeCodebooks(corpus.sparkSession, path, cb)
+    IndexStore.write(IndexStore.PqCodes, path, pqEncode(corpus, idCol, vecCol, cb))
   }
 
   def loadPqIndex(spark: SparkSession, path: String): PqIndex =
-    PqIndex(loadCodebooks(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes"))
-
-  /** Rebuild driver-side codebooks from their parquet rows — shared by the
-    * PQ and IVF-PQ index loaders so the two paths cannot drift.
-    */
-  private def loadCodebooks(spark: SparkSession,
-      path: String): Array[Array[Array[Double]]] = {
-    val raw = spark.read.parquet(path)
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Double](2).toArray))
-      .toMap
-    require(raw.nonEmpty, s"no codebook rows at $path")
-    val m = raw.keys.map(_._1).max + 1
-    Array.tabulate(m) { j =>
-      val ks = raw.keys.collect { case (`j`, c) => c }.max + 1
-      Array.tabulate(ks)(c => raw((j, c)))
-    }
-  }
+    PqIndex(IndexStore.codebooks(spark, path),
+      IndexStore.read(spark, IndexStore.PqCodes, path))
 
   /** Probe a persisted PQ index: per-query ADC tables against the stored
     * codes — the scan arithmetic and shuffle shape of [[pqTopK]] without
@@ -729,15 +716,11 @@ object Similarity {
       trainFraction: Double, kmeansIters: Int,
       meanQuantizeInv: Option[Double] = None)
       : (Array[Array[Double]], Array[Long], DataFrame, Array[Array[Array[Double]]]) = {
-    val norm = withUnitVec(Spread.toCores(corpus)
-        .select(col(idCol).as("id"), col(vecCol)), vecCol, "v")
-      .select(col("id"), col("v"))
+    val norm = unitRows(Spread.toCores(corpus), idCol, vecCol)
     val cents = kmeansIterate(norm, "id", "v",
       centroids(norm, "id", "v", numCentroids), kmeansIters, meanQuantizeInv)
     val (cm, cids) = collectCents(cents)
-    val assigned = assignWith(norm, "id", "v", cm, cids)
-    val res = assigned.withColumn("r",
-      residual(col("cv"), col("cid"), cm, cids))
+    val res = residuals(norm, cm, cids)
 
     val sampled =
       if (trainFraction >= 1.0) res
@@ -745,11 +728,27 @@ object Similarity {
     val train0 = sampled.select(col("vec_id").as("id"), col("r").as("v"))
     val train = if (trainFraction >= 1.0) train0 else train0.materialized(true)
     val cb = pqTrainLloyd(train, dim, m, ksub, iters, meanQuantizeInv)
-
-    val codes = res.select(col("vec_id"), col("cid"),
-      graft.functions.sketches.pq_encode(col("r"), cb).as("codes"))
-    (cm, cids, codes, cb)
+    (cm, cids, residualCodes(res, cb), cb)
   }
+
+  /** (id, v): `idCol`/`vecCol` renamed, vectors L2-normalized. */
+  private def unitRows(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    withUnitVec(df.select(col(idCol).as("id"), col(vecCol)), vecCol, "v")
+      .select(col("id"), col("v"))
+
+  /** Unit rows assigned to their nearest centroid, with the residual `r`
+    * an IVF-PQ index encodes — shared by the build and the append.
+    */
+  private def residuals(norm: DataFrame, cm: Array[Array[Double]],
+      cids: Array[Long]): DataFrame =
+    assignWith(norm, "id", "v", cm, cids)
+      .withColumn("r", residual(col("cv"), col("cid"), cm, cids))
+
+  /** The IVF-PQ codes table rows (vec_id, cid, codes) of [[residuals]]. */
+  private def residualCodes(res: DataFrame,
+      cb: Array[Array[Array[Double]]]): DataFrame =
+    res.select(col("vec_id"), col("cid"),
+      graft.functions.sketches.pq_encode(col("r"), cb).as("codes"))
 
   /** IVF-PQ probe tail: per-(query, probed-cell) residual ADC tables join
     * the codes of those cells only; ranks reduce through the bounded
@@ -771,10 +770,7 @@ object Similarity {
       cm: Array[Array[Double]], cids: Array[Long],
       cb: Array[Array[Array[Double]]], k: Int, nProbe: Int): DataFrame = {
     val kEff = cb(0).length
-    val probes = uq
-      .select(col("query_id"), col("__v"),
-        explode(graft.functions.sketches.top_centroids(col("__v"), cm, cids,
-          nProbe)).as("cid"))
+    val probes = cellProbes(uq, "__v", cm, cids, nProbe)
       .select(col("query_id"), col("cid"),
         graft.functions.sketches.pq_tables(
           residual(col("__v"), col("cid"), cm, cids), cb).as("tables"))
@@ -824,103 +820,92 @@ object Similarity {
       trainFraction: Double = 1.0, kmeansIters: Int = 1,
       numFiles: Int = 32): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     val (cm, cids, codes, cb) =
       buildIvfPq(corpus, idCol, vecCol, dim, numCentroids, m, ksub, iters,
         trainFraction, kmeansIters)
-    cids.zip(cm.map(_.toSeq)).toSeq.toDF("cid", "centroid")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    (for (j <- cb.indices; c <- cb(j).indices) yield (j, c, cb(j)(c).toSeq))
-      .toDF("j", "code", "centroid")
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    Layout.writeClustered(codes, s"$path/codes", Seq(col("cid")), numFiles)
+    IndexStore.writeCentroids(spark, path, cm, cids)
+    IndexStore.writeCodebooks(spark, path, cb)
+    IndexStore.write(IndexStore.IvfPqCodes, path, codes, numFiles)
   }
 
   def loadIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex = {
-    val (cm, cids) = collectCents(spark.read.parquet(s"$path/centroids"))
-    IvfPqIndex(cm, cids, loadCodebooks(spark, s"$path/codebooks"),
-      spark.read.parquet(s"$path/codes"))
+    val (cm, cids) = IndexStore.centroids(spark, path)
+    IvfPqIndex(cm, cids, IndexStore.codebooks(spark, path),
+      IndexStore.read(spark, IndexStore.IvfPqCodes, path))
   }
 
   /** Append a new batch to a persisted IVF index WITHOUT retraining:
     * assign the batch against the SAVED centroids and append its rows,
     * clustered on cid, to the assigned table — each appended file covers a
     * narrow cid range, so probe-time file skipping holds for old and new
-    * files alike. This is the incremental-ingest half of index
-    * maintenance: a 100 TB index absorbs a daily batch without re-touching
-    * the corpus. Re-train (a fresh [[saveIvfIndex]]) only when the corpus
-    * distribution has drifted enough that cell sizes skew.
+    * files alike. The appended rows carry the metadata columns the saved
+    * table holds (`saveIvfIndex(metaCols = ...)`), so filtered search
+    * ([[ivfTopKWithIndexWhere]]) sees them; the batch must supply them.
+    * This is the incremental-ingest half of index maintenance: a 100 TB
+    * index absorbs a daily batch without re-touching the corpus. Re-train
+    * (a fresh [[saveIvfIndex]]) only when the corpus distribution has
+    * drifted enough that cell sizes skew.
     */
   def appendToIvfIndex(spark: SparkSession, path: String, newDocs: DataFrame,
       idCol: String, vecCol: String, numFiles: Int = 4): Unit = {
-    val (cm, cids) = collectCents(spark.read.parquet(s"$path/centroids"))
-    Layout.writeClustered(assignWith(newDocs, idCol, vecCol, cm, cids),
-      s"$path/assigned", Seq(col("cid")), numFiles, mode = "append")
+    val idx = loadIvfIndex(spark, path)
+    val metaCols = idx.assigned.columns.toSeq.filterNot(Set("vec_id", "cv", "cid"))
+    IndexStore.write(IndexStore.IvfAssigned, path,
+      assignWith(newDocs, idCol, vecCol, idx.cm, idx.cids, metaCols), numFiles,
+      mode = "append")
   }
 
-  /** Delete vectors from a persisted IVF index WITHOUT retraining — the
-    * removal half of the maintenance contract (takedowns, retention cuts;
-    * the complement of [[appendToIvfIndex]]). The assigned table is
-    * rewritten cid-clustered through the atomic
-    * [[Layout.rewriteClustered]] swap — no tombstones for probes to
-    * merge, file skipping preserved. Centroids are untouched, exactly as
-    * append leaves them: a delete changes which vectors exist, not the
-    * coarse geometry (re-train = rebuild, a different operation). Probing
-    * after delete equals probing the original index with the deleted rows
-    * filtered out. Unknown ids are no-ops (idempotent).
-    */
   /** Batch rows with NO near neighbor (cosine >= `tau`) in the persisted
     * IVF index — the embedding-space analog of
     * [[Dedup.novelAgainstMinhashIndex]], for semantic crawl admission.
     * Probes are cell-bounded (each query checks its `nProbe` nearest
-    * cells, cid file skipping via the collected probed set) and the
-    * check is a THRESHOLD semi-join, cheaper than a top-k: no ranking
-    * aggregation, one exact cosine per candidate. Recall is the IVF
-    * probe's — a neighbor assigned outside the probed cells is missed;
-    * raise `nProbe` for stricter admission.
+    * cells, cid file skipping via [[probedCells]]) and the check is a
+    * THRESHOLD semi-join, cheaper than a top-k: no ranking aggregation,
+    * one exact cosine per candidate. Recall is the IVF probe's — a
+    * neighbor assigned outside the probed cells is missed; raise `nProbe`
+    * for stricter admission.
     */
   def novelAgainstIvfIndex(index: IvfIndex, batch: DataFrame, idCol: String,
       vecCol: String, tau: Double, nProbe: Int = 4): DataFrame = {
-    val probes = batch.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv"))
-      .select(col("query_id"), col("qv"),
-        explode(graft.functions.sketches.top_centroids(
-          col("qv"), index.cm, index.cids, nProbe)).as("cid"))
-    val probedCids = probes.select("cid").distinct().collect().map(_.getLong(0))
-    val dups = index.assigned.filter(col("cid").isin(probedCids: _*))
+    val q = batch.select(col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("qv"))
+    val probes = cellProbes(q, "qv", index.cm, index.cids, nProbe)
+    val dups = probedCells(index.assigned, probes)
       .join(broadcast(probes), Seq("cid"))
       .filter(cosine(col("cv"), col("qv")) >= tau)
       .select(col("query_id").as("__graft_dup_id")).distinct()
     batch.join(dups, col(idCol) === col("__graft_dup_id"), "left_anti")
   }
 
+  /** Delete vectors from a persisted IVF index WITHOUT retraining — the
+    * removal half of the maintenance contract (takedowns, retention cuts;
+    * the complement of [[appendToIvfIndex]]). The assigned table is
+    * rewritten cid-clustered through [[IndexStore.delete]] — no
+    * tombstones for probes to merge, file skipping preserved. Centroids
+    * are untouched, exactly as append leaves them: a delete changes which
+    * vectors exist, not the coarse geometry (re-train = rebuild, a
+    * different operation). Probing after delete equals probing the
+    * original index with the deleted rows filtered out. Unknown ids are
+    * no-ops (idempotent).
+    */
   def deleteFromIvfIndex(ids: DataFrame, idCol: String, path: String,
-      numFiles: Int = 32): Unit = {
-    val del = ids.select(col(idCol).as("vec_id")).distinct()
-    Layout.rewriteClustered(ids.sparkSession, s"$path/assigned",
-      Seq(col("cid")), numFiles)(_.join(del, Seq("vec_id"), "left_anti"))
-  }
+      numFiles: Int = 32): Unit =
+    IndexStore.delete(ids, idCol, path, IndexStore.IvfAssigned -> numFiles)(_ => ())
 
   /** [[deleteFromIvfIndex]] for a plain PQ index: codes rewritten without
     * the deleted ids; codebooks untouched (trained geometry, like
     * centroids).
     */
   def deleteFromPqIndex(ids: DataFrame, idCol: String, path: String,
-      numFiles: Int = 8): Unit = {
-    val del = ids.select(col(idCol).as("vec_id")).distinct()
-    Layout.rewriteClustered(ids.sparkSession, s"$path/codes",
-      Seq(col("vec_id")), numFiles)(_.join(del, Seq("vec_id"), "left_anti"))
-  }
+      numFiles: Int = 8): Unit =
+    IndexStore.delete(ids, idCol, path, IndexStore.PqCodes -> numFiles)(_ => ())
 
   /** [[deleteFromIvfIndex]] for the fused IVF-PQ index: cid-clustered
     * codes rewritten; centroids and codebooks untouched.
     */
   def deleteFromIvfPqIndex(ids: DataFrame, idCol: String, path: String,
-      numFiles: Int = 32): Unit = {
-    val del = ids.select(col(idCol).as("vec_id")).distinct()
-    Layout.rewriteClustered(ids.sparkSession, s"$path/codes",
-      Seq(col("cid")), numFiles)(_.join(del, Seq("vec_id"), "left_anti"))
-  }
+      numFiles: Int = 32): Unit =
+    IndexStore.delete(ids, idCol, path, IndexStore.IvfPqCodes -> numFiles)(_ => ())
 
   /** Incremental append for a persisted IVF-PQ index: residual-encode the
     * batch with the SAVED centroids and codebooks, append cid-clustered
@@ -930,21 +915,13 @@ object Similarity {
       newDocs: DataFrame, idCol: String, vecCol: String,
       numFiles: Int = 4): Unit = {
     val idx = loadIvfPqIndex(spark, path)
-    val norm = withUnitVec(newDocs.select(col(idCol).as("id"), col(vecCol)),
-        vecCol, "v")
-      .select(col("id"), col("v"))
-    val assigned = assignWith(norm, "id", "v", idx.cm, idx.cids)
-    val codes = assigned
-      .withColumn("r", residual(col("cv"), col("cid"), idx.cm, idx.cids))
-      .select(col("vec_id"), col("cid"),
-        graft.functions.sketches.pq_encode(col("r"), idx.codebooks).as("codes"))
-    Layout.writeClustered(codes, s"$path/codes", Seq(col("cid")), numFiles,
-      mode = "append")
+    val res = residuals(unitRows(newDocs, idCol, vecCol), idx.cm, idx.cids)
+    IndexStore.write(IndexStore.IvfPqCodes, path,
+      residualCodes(res, idx.codebooks), numFiles, mode = "append")
   }
 
-  /** Probe a persisted IVF-PQ index. The probed cid set is pushed as a
-    * scan filter (bounded by queries × nProbe) so it meets the clustered
-    * layout's per-file cid ranges and unprobed files are never read.
+  /** Probe a persisted IVF-PQ index, reading only the probed cells'
+    * files ([[probedCells]]).
     */
   def ivfPqTopKWithIndex(index: IvfPqIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nProbe: Int = 4): DataFrame = {
@@ -956,11 +933,8 @@ object Similarity {
     val uq = withUnitVec(queries, vecCol, "__v")
       .select(col(idCol).as("query_id"), col("__v"))
       .materialized(true)
-    val probedCids = uq
-      .select(explode(graft.functions.sketches.top_centroids(col("__v"),
-        index.cm, index.cids, nProbe)).as("cid"))
-      .distinct().collect().map(_.getLong(0))
-    val codes = index.codes.filter(col("cid").isin(probedCids: _*))
+    val codes = probedCells(index.codes,
+      cellProbes(uq, "__v", index.cm, index.cids, nProbe))
     ivfPqProbeUnit(codes, uq, index.cm, index.cids, index.codebooks, k, nProbe)
   }
 

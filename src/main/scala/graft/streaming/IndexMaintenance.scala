@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.{Dedup, Retrieval, Similarity}
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming maintenance of the persisted retrieval/near-dup indexes: keep
@@ -73,12 +73,11 @@ object IndexMaintenance {
     */
   def minhashAppendSink(path: String, idCol: String, textCol: String,
       hash64: Column => Column = xxhash64(_), numFiles: Int = 8)
-      : (DataFrame, Long) => Unit = (batch, epochId) =>
-    applyEpoch(batch, path, epochId)(
-      append = Dedup.appendToMinhashIndex(batch, idCol, textCol, path,
-        hash64, numFiles),
-      scrub = Dedup.deleteFromMinhashIndex(batch.select(col(idCol)), idCol,
-        path))
+      : (DataFrame, Long) => Unit =
+    epochSink(path, idCol)(
+      (b, _) => Dedup.appendToMinhashIndex(b, idCol, textCol, path, hash64,
+        numFiles),
+      scrub = Dedup.deleteFromMinhashIndex(_, idCol, path))
 
   /** foreachBatch function appending each micro-batch to a persisted BM25
     * index at `path` (exactly-once; see class doc). The scrub path also
@@ -87,13 +86,12 @@ object IndexMaintenance {
     * stats bump — recomputing from the postings is exact either way.
     */
   def bm25AppendSink(path: String, idCol: String, textCol: String,
-      numFiles: Int = 8): (DataFrame, Long) => Unit = (batch, epochId) =>
-    applyEpoch(batch, path, epochId)(
-      append = Retrieval.appendToBm25Index(batch, idCol, textCol, path,
-        numFiles),
-      scrub = {
-        Retrieval.deleteFromBm25Index(batch.select(col(idCol)), idCol, path)
-        Retrieval.repairBm25Stats(batch.sparkSession, path)
+      numFiles: Int = 8): (DataFrame, Long) => Unit =
+    epochSink(path, idCol)(
+      (b, _) => Retrieval.appendToBm25Index(b, idCol, textCol, path, numFiles),
+      scrub = { ids =>
+        Retrieval.deleteFromBm25Index(ids, idCol, path)
+        Retrieval.repairBm25Stats(ids.sparkSession, path)
       })
 
   /** foreachBatch function appending each micro-batch of embeddings to a
@@ -106,24 +104,22 @@ object IndexMaintenance {
     * heals wherever it died.
     */
   def ivfAppendSink(path: String, idCol: String, vecCol: String,
-      numFiles: Int = 4): (DataFrame, Long) => Unit = (batch, epochId) =>
-    applyEpoch(batch, path, epochId)(
-      append = Similarity.appendToIvfIndex(batch.sparkSession, path, batch,
-        idCol, vecCol, numFiles),
-      scrub = Similarity.deleteFromIvfIndex(batch.select(col(idCol)), idCol,
-        path))
+      numFiles: Int = 4): (DataFrame, Long) => Unit =
+    epochSink(path, idCol)(
+      (b, _) => Similarity.appendToIvfIndex(b.sparkSession, path, b, idCol,
+        vecCol, numFiles),
+      scrub = Similarity.deleteFromIvfIndex(_, idCol, path))
 
   /** [[ivfAppendSink]] for the fused IVF-PQ index: each batch is
     * residual-encoded with the saved centroids AND codebooks
     * ([[Similarity.appendToIvfPqIndex]]).
     */
   def ivfPqAppendSink(path: String, idCol: String, vecCol: String,
-      numFiles: Int = 4): (DataFrame, Long) => Unit = (batch, epochId) =>
-    applyEpoch(batch, path, epochId)(
-      append = Similarity.appendToIvfPqIndex(batch.sparkSession, path,
-        batch, idCol, vecCol, numFiles),
-      scrub = Similarity.deleteFromIvfPqIndex(batch.select(col(idCol)),
-        idCol, path))
+      numFiles: Int = 4): (DataFrame, Long) => Unit =
+    epochSink(path, idCol)(
+      (b, _) => Similarity.appendToIvfPqIndex(b.sparkSession, path, b, idCol,
+        vecCol, numFiles),
+      scrub = Similarity.deleteFromIvfPqIndex(_, idCol, path))
 
   /** The crawl-ADMISSION composition — the deployment shape streaming
     * index maintenance exists for: per micro-batch, keep only the
@@ -154,40 +150,23 @@ object IndexMaintenance {
   def minhashAdmitSink(path: String, idCol: String, textCol: String,
       threshold: Double, sink: (DataFrame, Long) => Unit,
       hash64: Column => Column = xxhash64(_), numFiles: Int = 8,
-      dropIntraBatchNearDups: Boolean = false)
-      : (DataFrame, Long) => Unit = (batch, epochId) =>
-    applyEpoch(batch, path, epochId)(
-      append = {
-        val idx = Dedup.loadMinhashIndex(batch.sparkSession, path)
-        val base =
-          if (!dropIntraBatchNearDups) batch
-          else {
-            // the intra-batch pass and the index probe must share ONE
-            // similarity definition: take the sketch geometry from the
-            // index's persisted params, not library defaults — an index
-            // saved with non-default shingle/hash/band settings would
-            // otherwise drop by one definition and admit by another
-            val pairs = Dedup.minhashNearDups(batch, idCol, textCol,
-                shingleSize = idx.shingleSize, numHashes = idx.numHashes,
-                numBands = idx.numBands, threshold = threshold,
-                seed = idx.seed, hash64 = hash64)
-              .select(col("id_a"), col("id_b"))
-            // dupClustersAny: ids keep their own type — the long-cast path
-            // would NULL out string/UUID ids and silently admit both halves
-            // of every near-pair
-            val drop = Dedup.dupClustersAny(pairs)
-              .filter(col("id") =!= col("cluster"))
-              .select(col("id").as("__graft_dup_id"))
-            batch.join(drop, col(idCol) === col("__graft_dup_id"), "left_anti")
-          }
-        val novel = Dedup.novelAgainstMinhashIndex(idx, base, idCol,
-          textCol, threshold, hash64)
-        Dedup.appendToMinhashIndex(novel, idCol, textCol, path, hash64,
-          numFiles)
-        sink(novel, epochId)
-      },
-      scrub = Dedup.deleteFromMinhashIndex(batch.select(col(idCol)), idCol,
-        path))
+      dropIntraBatchNearDups: Boolean = false): (DataFrame, Long) => Unit =
+    admitSink[Dedup.MinhashIndex](path, idCol, sink, dropIntraBatchNearDups)(
+      load = Dedup.loadMinhashIndex(_, path),
+      // the intra-batch pass and the index probe must share ONE similarity
+      // definition: take the sketch geometry from the index's persisted
+      // params, not library defaults — an index saved with non-default
+      // shingle/hash/band settings would otherwise drop by one definition
+      // and admit by another
+      nearPairs = (idx, b) => Dedup.minhashNearDups(b, idCol, textCol,
+        shingleSize = idx.shingleSize, numHashes = idx.numHashes,
+        numBands = idx.numBands, threshold = threshold, seed = idx.seed,
+        hash64 = hash64),
+      novel = Dedup.novelAgainstMinhashIndex(_, _, idCol, textCol, threshold,
+        hash64),
+      append = Dedup.appendToMinhashIndex(_, idCol, textCol, path, hash64,
+        numFiles),
+      scrub = Dedup.deleteFromMinhashIndex(_, idCol, path))
 
   /** The SEMANTIC crawl-admission composition: per micro-batch, keep only
     * the documents whose embedding has NO near neighbor (cosine >= `tau`)
@@ -209,29 +188,54 @@ object IndexMaintenance {
   def ivfAdmitSink(path: String, idCol: String, vecCol: String,
       tau: Double, sink: (DataFrame, Long) => Unit, nProbe: Int = 4,
       numFiles: Int = 4, dropIntraBatchNearDups: Boolean = false)
-      : (DataFrame, Long) => Unit = (batch, epochId) =>
-    applyEpoch(batch, path, epochId)(
-      append = {
-        val idx = Similarity.loadIvfIndex(batch.sparkSession, path)
-        val base =
-          if (!dropIntraBatchNearDups) batch
-          else {
-            val pairs = graft.ops.Dedup.embeddingNearDups(batch, idCol,
-                vecCol, dim = idx.cm.head.length, threshold = tau)
-              .select(col("id_a"), col("id_b"))
-            val drop = graft.ops.Dedup.dupClustersAny(pairs)
-              .filter(col("id") =!= col("cluster"))
-              .select(col("id").as("__graft_dup_id"))
-            batch.join(drop, col(idCol) === col("__graft_dup_id"), "left_anti")
-          }
-        val novel = Similarity.novelAgainstIvfIndex(idx, base, idCol,
-          vecCol, tau, nProbe)
-        Similarity.appendToIvfIndex(batch.sparkSession, path, novel, idCol,
-          vecCol, numFiles)
-        sink(novel, epochId)
-      },
-      scrub = Similarity.deleteFromIvfIndex(batch.select(col(idCol)), idCol,
-        path))
+      : (DataFrame, Long) => Unit =
+    admitSink[Similarity.IvfIndex](path, idCol, sink, dropIntraBatchNearDups)(
+      load = Similarity.loadIvfIndex(_, path),
+      nearPairs = (idx, b) => Dedup.embeddingNearDups(b, idCol, vecCol,
+        dim = idx.cm.head.length, threshold = tau),
+      novel = Similarity.novelAgainstIvfIndex(_, _, idCol, vecCol, tau, nProbe),
+      append = b => Similarity.appendToIvfIndex(b.sparkSession, path, b, idCol,
+        vecCol, numFiles),
+      scrub = Similarity.deleteFromIvfIndex(_, idCol, path))
+
+  /** The foreachBatch function every sink here is: [[applyEpoch]] around
+    * `append` of the batch, with `scrub` of the batch's ids as the
+    * crashed-epoch heal.
+    */
+  private def epochSink(path: String, idCol: String)(
+      append: (DataFrame, Long) => Unit,
+      scrub: DataFrame => Unit): (DataFrame, Long) => Unit = (batch, epochId) =>
+    applyEpoch(batch, path, epochId)(append(batch, epochId),
+      scrub(batch.select(col(idCol))))
+
+  /** The one admission body, under [[epochSink]]: load the index, keep one
+    * representative per within-batch near-dup cluster (when asked), keep
+    * what `novel` finds new against the index, append exactly that, and
+    * hand it to `sink`.
+    */
+  private def admitSink[I](path: String, idCol: String,
+      sink: (DataFrame, Long) => Unit, dropIntraBatchNearDups: Boolean)(
+      load: SparkSession => I, nearPairs: (I, DataFrame) => DataFrame,
+      novel: (I, DataFrame) => DataFrame, append: DataFrame => Unit,
+      scrub: DataFrame => Unit): (DataFrame, Long) => Unit =
+    epochSink(path, idCol)({ (batch, epochId) =>
+      val idx = load(batch.sparkSession)
+      val base =
+        if (!dropIntraBatchNearDups) batch
+        else {
+          // dupClustersAny: ids keep their own type — the long-cast path
+          // would NULL out string/UUID ids and silently admit both halves
+          // of every near-pair
+          val drop = Dedup.dupClustersAny(
+              nearPairs(idx, batch).select(col("id_a"), col("id_b")))
+            .filter(col("id") =!= col("cluster"))
+            .select(col("id").as("__graft_dup_id"))
+          batch.join(drop, col(idCol) === col("__graft_dup_id"), "left_anti")
+        }
+      val kept = novel(idx, base)
+      append(kept)
+      sink(kept, epochId)
+    }, scrub)
 
   /** Delete the epoch markers at `path` — the explicit reset for handing
     * an index to a NEW maintaining query (fresh checkpoint). Only correct
@@ -245,10 +249,9 @@ object IndexMaintenance {
       path: String): Unit = {
     val dir = new HPath(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try fs.delete(new HPath(dir, "_last_epoch"), false)
-    catch { case _: java.io.IOException => () }
-    try fs.delete(new HPath(dir, "_epoch_intent"), false)
-    catch { case _: java.io.IOException => () }
+    for (marker <- Seq("_last_epoch", "_epoch_intent"))
+      try fs.delete(new HPath(dir, marker), false)
+      catch { case _: java.io.IOException => () }
   }
 
   /** The exactly-once epoch wrapper (package-visible for direct testing).
@@ -275,16 +278,12 @@ object IndexMaintenance {
     def readMarker(p: HPath): Option[(Long, Option[String])] =
       try {
         val in = fs.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](256)
-          var n = in.read(chunk)
-          while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-          val lines = new String(buf.toByteArray,
+        val lines =
+          try new String(in.readAllBytes(),
             java.nio.charset.StandardCharsets.UTF_8).trim.split('\n')
-          Some((lines(0).trim.toLong,
-            lines.drop(1).headOption.map(_.trim).filter(_.nonEmpty)))
-        } finally in.close()
+          finally in.close()
+        Some((lines(0).trim.toLong,
+          lines.drop(1).headOption.map(_.trim).filter(_.nonEmpty)))
       } catch { case _: java.io.IOException | _: NumberFormatException => None }
 
     def writeAtomic(p: HPath, v: Long): Unit = {

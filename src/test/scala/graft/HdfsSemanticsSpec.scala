@@ -5,7 +5,8 @@ import graft.log.{FileTopicLog, SegmentCodec}
 import graft.model.{Payload, TopicBucket}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FSDataOutputStream, Path => HPath}
+import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -22,17 +23,36 @@ import java.nio.file.Files
   * for: `hadoop-minicluster` cannot resolve in this build (offline coursier
   * cache carries only scalatest/scalacheck; /opt/spark/jars has only the
   * shaded hadoop-client), so the strict-rename semantics are enforced here
-  * instead of by a namenode. The one HDFS property this cannot reproduce
-  * is namenode-side ATOMICITY of create/rename under concurrency across
-  * JVMs — documented in DESIGN.
+  * instead of by a namenode.
+  *
+  * HDFS decides a no-replace rename and an exclusive create inside the
+  * namenode, atomically. RawLocal checks `exists` and then acts, so two
+  * threads could both pass the check: both "win" the exclusive create of
+  * a bucket lock, and the later rename silently replaces the earlier
+  * one's segment. One rig-wide lock makes each check-and-act a single
+  * step, as on HDFS, within this JVM. Atomicity ACROSS JVMs is still not
+  * modelled — documented in DESIGN.
   */
 class StrictHdfsTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "hdfstest"
   override def getUri: java.net.URI = java.net.URI.create("hdfstest:///")
   override def rename(src: HPath, dst: HPath): Boolean =
-    if (exists(dst)) false // HDFS refuses an existing target
-    else super.rename(src, dst)
+    StrictHdfsTestFs.synchronized {
+      if (exists(dst)) false // HDFS refuses an existing target
+      else super.rename(src, dst)
+    }
+  // the overload fs.create(path, overwrite) lands in
+  override def create(f: HPath, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    StrictHdfsTestFs.synchronized(
+      super.create(f, overwrite, bufferSize, replication, blockSize, progress))
 }
+
+/** The rig-wide lock of [[StrictHdfsTestFs]] (one per JVM, shared by every
+  * instance, as one namenode serves every client).
+  */
+object StrictHdfsTestFs
 
 class HdfsSemanticsSpec extends AnyFunSuite {
 
@@ -100,18 +120,15 @@ class HdfsSemanticsSpec extends AnyFunSuite {
     out.write("holder".getBytes("UTF-8")); out.close()
     intercept[java.io.IOException] { log.fs.create(lock, false) }
     log.fs.delete(lock, false)
-    // Two concurrent appenders. RawLocal's create(overwrite=false) is
-    // check-then-act (NOT namenode-atomic — the one HDFS property this rig
-    // cannot reproduce), so both threads CAN occasionally take the lock
-    // and assign the same offsets. The contract under test is therefore
-    // the storage plane's own guarantee: every append either LANDS or
-    // fails LOUDLY — never a silent row loss — and the landed log stays
-    // dense. "Loudly" means ANY thrown exception: usually the typed
-    // same-name-different-content IllegalStateException, but the racing
-    // loser can also surface an IO-shaped failure from the torn window
-    // (counting only the ISE made this test flake ~1-in-3 while the
-    // invariant held — the silent-loss case is rows missing with NOTHING
-    // thrown, which the count below still catches exactly).
+    // Two concurrent appenders. The contract under test is the storage
+    // plane's own guarantee: every append either LANDS or fails LOUDLY —
+    // never a silent row loss — and the landed log stays dense. "Loudly"
+    // means ANY thrown exception (typed same-name-different-content
+    // IllegalStateException or an IO-shaped failure); the silent-loss case
+    // is rows missing with NOTHING thrown, which the count below catches
+    // exactly. The rig's create and rename are atomic (see
+    // StrictHdfsTestFs), so the bucket lock has one holder at a time; a
+    // check-then-act rig let both threads hold it and lost rows silently.
     val errors = new java.util.concurrent.atomic.AtomicInteger(0)
     val caught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 2).map { t =>

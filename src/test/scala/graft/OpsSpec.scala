@@ -498,6 +498,20 @@ class OpsSpec extends AnyFunSuite {
       "vec_id", "embedding", k = 5, pred = lit(true), nProbe = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(unf == where)
+    // appended rows keep the metadata columns: twins of the probe vectors,
+    // appended under a label no saved row has, are exactly what a filtered
+    // probe on that label finds
+    val twins = emb.filter(col("vec_id") < 20)
+      .select((col("vec_id") + 7000000L).as("vec_id"), col("embedding"),
+        lit(42).as("label"))
+    Similarity.appendToIvfIndex(spark, s"$tmp/ivf", twins, "vec_id",
+      "embedding", numFiles = 2)
+    val grown = Similarity.ivfTopKWithIndexWhere(
+        Similarity.loadIvfIndex(spark, s"$tmp/ivf"), probe, "vec_id",
+        "embedding", k = 1, pred = col("label") === 42, nProbe = 3)
+      .collect().map(r => (r.getLong(0) - 5000000L, r.getLong(1) - 7000000L))
+    assert(grown.length == 20 && grown.forall { case (q, v) => q == v },
+      s"filtered probe must find each appended twin: ${grown.toSeq}")
   }
 
   test("meanPoolEmbeddings: hand-computed means, unit norm, zero-vector safety") {
@@ -1759,6 +1773,18 @@ class OpsSpec extends AnyFunSuite {
   test("index delete is identical to a rebuild without the ids (BM25 / MinHash / IVF)") {
     import spark.implicits._
     import graft.ops.{Retrieval, Similarity}
+    // a rewritten table stays range-clustered on its leading cluster
+    // column: files sorted by (lo, hi), no file's hi passes the next file's
+    // lo (equal endpoints allowed — MinHash clusters on (band, bandHash))
+    def assertClustered(p: String, key: String): Unit = {
+      val ranges = graft.ops.Layout.fileRanges(spark, p, key)
+      assert(ranges.count() > 1, s"$p: one file cannot show clustering")
+      val overlaps = ranges.withColumn("prev_hi", lag(col("hi"), 1).over(
+          org.apache.spark.sql.expressions.Window.orderBy("lo", "hi")))
+        .filter(col("prev_hi") > col("lo"))
+      assert(overlaps.isEmpty,
+        s"$p not range-clustered on $key: ${ranges.collect().toSeq}")
+    }
     val qdf = Seq((0L, "spark join merge"), (1L, "customer data line"))
       .toDF("qid", "qtext")
     val delIds = docs.filter(col("doc_id") % 3 === 0).select(col("doc_id"))
@@ -1769,6 +1795,7 @@ class OpsSpec extends AnyFunSuite {
     val (bmDel, bmRef) = (tmp("bm-del"), tmp("bm-ref"))
     Retrieval.saveBm25Index(docs, "doc_id", "text", bmDel, numFiles = 4)
     Retrieval.deleteFromBm25Index(delIds, "doc_id", bmDel, numFiles = 2)
+    assertClustered(s"$bmDel/postings", "token")
     Retrieval.saveBm25Index(keep, "doc_id", "text", bmRef, numFiles = 4)
     def probe(p: String) = Retrieval.bm25TopKWithIndex(
         Retrieval.loadBm25Index(spark, p), qdf, "qid", "qtext", k = 10)
@@ -1788,6 +1815,7 @@ class OpsSpec extends AnyFunSuite {
     Dedup.saveMinhashIndex(docs, "doc_id", "text", mhDel,
       threshold = 0.5, numFiles = 4)
     Dedup.deleteFromMinhashIndex(delIds, "doc_id", mhDel, numFiles = 2)
+    assertClustered(s"$mhDel/bands", "band")
     Dedup.saveMinhashIndex(keep, "doc_id", "text", mhRef,
       threshold = 0.5, numFiles = 4)
     def rowsOf(p: String) = spark.read.parquet(p).collect().map(_.toSeq).toSet
@@ -1802,6 +1830,7 @@ class OpsSpec extends AnyFunSuite {
       numCentroids = 16, kmeansIters = 1, numFiles = 4)
     val delV = emb.filter(col("vec_id") % 3 === 0).select(col("vec_id"))
     Similarity.deleteFromIvfIndex(delV, "vec_id", ivf)
+    assertClustered(s"$ivf/assigned", "cid")
     // probes carry offset ids (the q82 convention — results exclude the
     // probe's own id, so an un-offset self probe would never match)
     val probes = emb.filter(col("vec_id") < 12)
@@ -1819,10 +1848,12 @@ class OpsSpec extends AnyFunSuite {
     Similarity.savePqIndex(emb, "vec_id", "embedding", pq,
       dim = 64, m = 8, ksub = 16, trainFraction = 0.25)
     Similarity.deleteFromPqIndex(delV, "vec_id", pq)
+    assertClustered(s"$pq/codes", "vec_id")
     Similarity.saveIvfPqIndex(emb, "vec_id", "embedding", fused,
       dim = 64, numCentroids = 16, m = 8, ksub = 16,
       trainFraction = 0.25, numFiles = 4)
     Similarity.deleteFromIvfPqIndex(delV, "vec_id", fused)
+    assertClustered(s"$fused/codes", "cid")
     val nKeep = emb.count() - delV.count()
     for (p <- Seq(s"$pq/codes", s"$fused/codes")) {
       val codes = spark.read.parquet(p)
@@ -1885,8 +1916,10 @@ class OpsSpec extends AnyFunSuite {
     // stats live only in stats__staged; load must finish the rename
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/stats"),
+    def interruptSwap(): Unit = fs.rename(
+      new org.apache.hadoop.fs.Path(s"$dir/stats"),
       new org.apache.hadoop.fs.Path(s"$dir/stats__staged"))
+    interruptSwap()
     val recovered = Retrieval.loadBm25Index(spark, dir)
     assert(recovered.nDocs == good.nDocs && recovered.avgdl == good.avgdl)
     // crash simulation 2: postings appended, stats bump lost — stats are
@@ -1898,6 +1931,27 @@ class OpsSpec extends AnyFunSuite {
     val repaired = Retrieval.loadBm25Index(spark, dir)
     assert(repaired.nDocs == good.nDocs && repaired.avgdl == good.avgdl,
       s"repaired ($nDocs, $sumDl) should replay the original stats")
+    // the same interrupted swap seen by append, then by delete (the
+    // streaming scrub's first step): each finishes the swap, and the stats
+    // equal those of a rebuild over the resulting corpus
+    def statsOf(p: String) = {
+      val i = Retrieval.loadBm25Index(spark, p)
+      (i.nDocs, i.avgdl)
+    }
+    def rebuilt(d: org.apache.spark.sql.DataFrame) = {
+      val ref = java.nio.file.Files.createTempDirectory("bm25-ref").toString
+      Retrieval.saveBm25Index(d, "doc_id", "text", ref, numFiles = 2)
+      statsOf(ref)
+    }
+    val more = Seq((4L, "delta zeta zeta eta")).toDF("doc_id", "text")
+    interruptSwap()
+    Retrieval.appendToBm25Index(more, "doc_id", "text", dir, numFiles = 1)
+    assert(statsOf(dir) == rebuilt(docs.union(more)), "append after a torn swap")
+    interruptSwap()
+    Retrieval.deleteFromBm25Index(Seq(2L).toDF("doc_id"), "doc_id", dir,
+      numFiles = 2)
+    assert(statsOf(dir) == rebuilt(docs.union(more).filter(col("doc_id") =!= 2L)),
+      "delete after a torn swap")
   }
 
   test("IR eval: hand-computed recall/MRR/nDCG, zero-hit query, no-relevant drops") {
